@@ -170,8 +170,8 @@ BROADCAST_PAIRS_MAX = 1_000_000
 
 def signature_similarity_edges(sig_df: DataFrame, num_bands: int = 16,
                                threshold: float = 0.5,
-                               max_bucket: int = 2000,
-                               releases: list | None = None,
+                               max_bucket: int = 2000, *,
+                               releases: list,
                                min_band_matches: int = 1) -> DataFrame:
     """Candidate pairs verified by estimated Jaccard (matching minhash
     fraction) ≥ threshold → (a, b, sim) edges.
@@ -184,13 +184,12 @@ def signature_similarity_edges(sig_df: DataFrame, num_bands: int = 16,
     Above the cap the original shuffle joins run — at that size the
     pair set is the big side and broadcasting it would be the bug.
 
-    ``releases``: optional list that receives every DataFrame persisted
-    inside — the caller unpersists them after its terminal action so storage
-    memory doesn't accumulate across batches in a long-lived driver."""
+    ``releases``: list that receives every DataFrame persisted inside —
+    the caller unpersists them after its terminal action so storage memory
+    doesn't accumulate across batches in a long-lived driver."""
     pairs = lsh_candidate_pairs(sig_df, num_bands, max_bucket, releases,
                                 min_band_matches).persist()
-    if releases is not None:
-        releases.append(pairs)
+    releases.append(pairs)
     n_pairs = pairs.count()
     sigs = sig_df.select(F.col("id"), F.col("sig"))
     sim = (F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y),

@@ -35,11 +35,6 @@ from pyspark.sql import functions as F
 from .similarity import _as_double
 
 
-def _subvec(vec_col: str, s: int, sub: int):
-    """1-based contiguous slice for subspace ``s`` (length ``sub``)."""
-    return F.slice(_as_double(F.col(vec_col)), s * sub + 1, sub)
-
-
 def pq_fit_deterministic(df: DataFrame, m: int = 4, k: int = 16,
                          n_iter: int = 2, id_col: str = "vec_id",
                          vec_col: str = "embedding",

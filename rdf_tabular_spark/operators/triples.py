@@ -418,46 +418,23 @@ ERRORS_SCHEMA = StructType([
 
 def rows_to_errors(rows_df: DataFrame, mapping: TableMapping) -> DataFrame:
     """Validation mode (reference: validate!, cell.errors accumulation,
-    metadata.rb:1712-1713 + Cell#valid?): run the SAME coercion kernel but
-    emit one row per cell error instead of triples. Narrow Arrow stage;
+    metadata.rb:1712-1713 + Cell#valid?): one row per cell error, taken
+    from the SAME coercion the conversion kernel runs
+    (``TripleKernel._coerce_cell`` — datatype mismatches plus the
+    ``required`` check, metadata.rb:1406-1412). Narrow Arrow stage;
     ``df.isEmpty()`` on the result is the distributed validity check.
-
-    Also enforces ``required`` (reference: metadata.rb:1406-1412): an empty
-    value in a required column is an error.
     """
-    from ..csvw import coerce as C
-
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [(_CompiledColumn(c), c) for c in mapping.columns]
+        k = TripleKernel(mapping)
         url = mapping.url
         out_cols = ["table_url", "source_num", "column", "value", "error"]
         for pdf in batches:
             out: list[tuple] = []
             for values, source_num in zip(pdf["values"], pdf["source_num"]):
-                values = list(values) + [None] * (len(cols) - len(values))
-                for (cc, cp), raw in zip(cols, values):
-                    value = raw if raw is not None else ""
-                    if value == "":
-                        value = cp.default if cp.default is not None else ""
-                    parts = value.split(cp.separator) if cp.separator else [value]
-                    for v in parts:
-                        v = v.strip()
-                        if v in cp.null_values:
-                            if cp.required:
-                                out.append((url, int(source_num), cp.name, raw,
-                                            f"{cp.name} is required"))
-                            continue
-                        if cp.datatypes is None:
-                            continue
-                        all_errs: list[str] = []
-                        for dt in cp.datatypes:
-                            cv, errs = C.value_matching_datatype(v, dt, cp.lang)
-                            if cv is not None:
-                                all_errs = []
-                                break
-                            all_errs.extend(errs)
-                        for e in all_errs:
-                            out.append((url, int(source_num), cp.name, v, e))
+                values = list(values) + [None] * (len(k.cols) - len(values))
+                for cc, raw in zip(k.cols, values):
+                    for e in k._coerce_cell(raw, cc.plan)[2]:
+                        out.append((url, int(source_num), cc.plan.name, raw, e))
             yield pd.DataFrame(out, columns=out_cols)
 
     from ..session import ensure_package_on_executors

@@ -216,11 +216,14 @@ def _read_rows_whole_file(spark: SparkSession, path: str,
 
     def _consume(rows_iter):
         row_num = 0
-        for row, row_idx, start_line in rows_iter:
+        for row, row_idx, start_line, raw in rows_iter:
             if row_idx <= skipped:
                 continue
-            if comment and row and (row[0] or "").startswith(comment):
-                continue     # data comment row (tabular-data-model §8)
+            if comment and raw.startswith(comment):
+                # data comment row (tabular-data-model §8): tested on the
+                # raw source line, like the line path — a quoted first
+                # cell '"#x"' is data
+                continue
             vals = row[skipc:] if skipc else row
             if skip_blank and not any((c or "").strip() for c in vals):
                 continue
@@ -234,17 +237,27 @@ def _read_rows_whole_file(spark: SparkSession, path: str,
         # CSV's row_sep accounting (reference metadata.rb:1199).
         with open(path, "r", encoding=open_encoding(dialect), newline="") as f:
             segs = _split_terminator(f.read(), dialect)
-        _consume((row, i + 1, i + 1)
-                 for i, row in enumerate(_parse_lines(segs, dialect)))
+        _consume((row, i + 1, i + 1, seg) for i, (seg, row)
+                 in enumerate(zip(segs, _parse_lines(segs, dialect))))
     else:
         with open(path, "r", encoding=open_encoding(dialect), newline="") as f:
             def _stream():
-                rdr = _csv.reader(f, **_csv_kwargs(dialect))
+                # csv.reader pulls physical lines only as a record needs
+                # them, so after each record `consumed` holds exactly its
+                # lines; the first one is the record's raw source line
+                consumed: list[str] = []
+
+                def lines():
+                    for line in f:
+                        consumed.append(line)
+                        yield line
+                rdr = _csv.reader(lines(), **_csv_kwargs(dialect))
                 prev_line = 0
                 idx = 0
                 for row in rdr:
                     idx += 1
-                    yield row, idx, prev_line + 1
+                    yield row, idx, prev_line + 1, consumed[0]
+                    consumed.clear()
                     prev_line = rdr.line_num
             _consume(_stream())
     return spark.createDataFrame(data, ROWS_SCHEMA)

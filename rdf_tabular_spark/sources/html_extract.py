@@ -14,10 +14,9 @@ UDF calls, no shuffle.
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass, field
 from html.parser import HTMLParser
-from typing import Iterator, Optional
+from typing import Callable, Iterable, Iterator, Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -489,24 +488,6 @@ VIRTUAL_ROWS_SCHEMA = StructType([
     StructField("lang", StringType(), True),
 ])
 
-MICRODATA_SCHEMA = StructType([
-    StructField("url", StringType(), False),
-    StructField("item_id", StringType(), False),
-    StructField("itemtype", StringType(), True),
-    StructField("prop", StringType(), False),
-    StructField("value", StringType(), True),
-])
-
-RDFA_SCHEMA = StructType([
-    StructField("url", StringType(), False),
-    StructField("subject", StringType(), False),
-    StructField("typeof", StringType(), True),
-    # prop is NULL on the sentinel row a property-less typeof scope emits
-    # (so its rdf:type triples survive the single-facet path)
-    StructField("prop", StringType(), True),
-    StructField("value", StringType(), True),
-])
-
 EXTRACTED_TEXT_SCHEMA = StructType([
     StructField("url", StringType(), False),
     StructField("extracted_text", StringType(), False),
@@ -519,93 +500,63 @@ def _decode(html) -> str:
     return str(html)
 
 
+def table_rows(page: PageContent, header_rows: int
+               ) -> Iterator[tuple[HtmlTable, list[str], int, int]]:
+    """(table, values, row_num, source_num) per data row of every table on
+    the page: the first ``header_rows`` rows of each table are its header,
+    ``row_num`` is 1-based after them and ``source_num`` is the 1-based
+    physical row. Numbering is page-local (no global ordering needed at
+    10^12 docs)."""
+    for t in page.tables:
+        for i, row in enumerate(t.rows[header_rows:], start=header_rows):
+            yield t, row, i - header_rows + 1, i + 1
+
+
+def map_pages(pages: DataFrame,
+              emit: Callable[[tuple, PageContent], Iterable[tuple]],
+              schema) -> DataFrame:
+    """The one page loop behind every HTML facet: each page of
+    ``pages(url, html, ...)`` is parsed exactly once and
+    ``emit(row, page)`` turns the parse into output rows (tuples in
+    ``schema`` field order); ``row`` is the page record (``row.url``,
+    ``row.lang``, ...). A facet is just its emitter, and several facets
+    over one parse are their emitters run in sequence.
+
+    Narrow Arrow stage, no shuffle. A batch that emits nothing yields no
+    frame (an empty object-dtype frame does not convert to every Arrow
+    type, e.g. ``list<string>``)."""
+    from ..session import ensure_package_on_executors
+    ensure_package_on_executors(pages.sparkSession)
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    names = schema.fieldNames()
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out: list[tuple] = []
+            for row in pdf.itertuples(index=False):
+                out.extend(emit(row, extract_page(_decode(row.html))))
+            if out:
+                yield pd.DataFrame(out, columns=names)
+
+    return pages.mapInPandas(kernel, schema=schema)
+
+
 def pages_to_virtual_rows(pages: DataFrame, header_rows: int = 1) -> DataFrame:
-    """pages(url, html, ...) → virtual rows. Narrow Arrow stage, no shuffle;
-    row numbering is page-local (no global ordering needed at 10^12 docs)."""
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in
-                                    ("url", "table_index", "values", "row_num", "source_num",
-                                     "csvw_meta", "lang")}
-            for url, html, lang in zip(pdf["url"], pdf["html"], pdf.get("lang", [None] * len(pdf))):
-                page = extract_page(_decode(html))
-                for t in page.tables:
-                    for i, row in enumerate(t.rows):
-                        if i < header_rows:
-                            continue
-                        out["url"].append(url)
-                        out["table_index"].append(t.index)
-                        out["values"].append(row)
-                        out["row_num"].append(i - header_rows + 1)
-                        out["source_num"].append(i + 1)
-                        out["csvw_meta"].append(page.csvw_meta)
-                        out["lang"].append(lang)
-            yield pd.DataFrame(out)
-    from ..session import ensure_package_on_executors
-    ensure_package_on_executors(pages.sparkSession)
-    return pages.mapInPandas(kernel, schema=VIRTUAL_ROWS_SCHEMA)
+    """pages(url, html, ...) → virtual rows, one per HTML-table data row."""
+    def emit(row, page):
+        lang = getattr(row, "lang", None)
+        return [(row.url, t.index, values, row_num, source_num,
+                 page.csvw_meta, lang)
+                for t, values, row_num, source_num
+                in table_rows(page, header_rows)]
+    return map_pages(pages, emit, VIRTUAL_ROWS_SCHEMA)
 
 
-def pages_to_microdata(pages: DataFrame) -> DataFrame:
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                page = extract_page(_decode(html))
-                for item in page.microdata:
-                    iid = item.item_id
-                    if iid.startswith("_:"):
-                        # deterministic skolem (process-hash is randomized)
-                        import hashlib
-                        uh = hashlib.sha1(url.encode()).hexdigest()[:10]
-                        iid = f"_:md-{uh}-{item.item_id[2:]}"
-                    for prop, value in item.props:
-                        rows.append((url, iid, item.itemtype, prop, value))
-            yield pd.DataFrame(rows, columns=["url", "item_id", "itemtype", "prop", "value"])
-    from ..session import ensure_package_on_executors
-    ensure_package_on_executors(pages.sparkSession)
-    return pages.mapInPandas(kernel, schema=MICRODATA_SCHEMA)
-
-
-def pages_to_rdfa(pages: DataFrame) -> DataFrame:
-    """RDFa-lite scopes → one row per (url, subject, typeof, prop, value).
-
-    Same fused Arrow kernel discipline as :func:`pages_to_microdata` —
-    vocab/prefix expansion already happened inside the parser, blank-node
-    subjects skolemize per url so reruns and engines agree.
-    """
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                page = extract_page(_decode(html))
-                for item in page.rdfa:
-                    subj = item.subject
-                    if subj.startswith("_:"):
-                        uh = hashlib.sha1(url.encode()).hexdigest()[:10]
-                        subj = f"_:ra-{uh}-{item.subject[2:]}"
-                    for prop, value in item.props:
-                        rows.append((url, subj, item.types, prop, value))
-                    if not item.props:
-                        # sentinel row: a typeof scope with no property
-                        # elements still carries its rdf:type triples
-                        rows.append((url, subj, item.types, None, None))
-            yield pd.DataFrame(
-                rows, columns=["url", "subject", "typeof", "prop", "value"])
-    from ..session import ensure_package_on_executors
-    ensure_package_on_executors(pages.sparkSession)
-    return pages.mapInPandas(kernel, schema=RDFA_SCHEMA)
+def _text_row(row, page):
+    return [(row.url, page.text)]
 
 
 def pages_to_text(pages: DataFrame) -> DataFrame:
     """Re-extract text per url (for the byte-identical invariant check)."""
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "url": pdf["url"],
-                "extracted_text": [extract_page(_decode(h)).text for h in pdf["html"]],
-            })
-    from ..session import ensure_package_on_executors
-    ensure_package_on_executors(pages.sparkSession)
-    return pages.mapInPandas(kernel, schema=EXTRACTED_TEXT_SCHEMA)
+    return map_pages(pages, _text_row, EXTRACTED_TEXT_SCHEMA)

@@ -1,7 +1,8 @@
 """Web-scale KG-construction pipeline over Common-Crawl-style pages.
 
 north_rule stages:
-  1. pages(url, warc_ts, html, text, lang) → virtual rows (sources/html_extract)
+  1. pages(url, warc_ts, html, text, lang) → page facets: CSVW tables,
+     microdata, JSON-LD, RDFa, OpenGraph, links, anchors, head metadata
   2. CSVW mapping rules → triples (this module) + mention detection /
      entity-link scoring against a broadcast entity dictionary
   3. canonicalization: MinHash-LSH blocking + connected components
@@ -9,16 +10,25 @@ north_rule stages:
   4. materialize deduplicated triples into partitioned graph tables
      (sinks/graph_store.py)
 
-All per-row logic runs inside Arrow-batched mapInPandas kernels; stages 1+2
-fuse into ONE narrow pass over the pages table (no shuffle until the
-canonicalization groupBy), which is what survives a 10^12-document scan:
-the cost is a single read of the html column + CPU, embarrassingly parallel.
+Every page facet is a small per-page emitter over one kernel,
+``sources.html_extract.map_pages``, which parses each page exactly once.
+A facet operator (``pages_to_links``, ``microdata_to_triples``, ...) is
+``map_pages`` with one emitter; the pipeline's fused stage
+(:func:`pages_to_combined_triples`) is the four triple emitters run in
+sequence on the same parse. Stages 1+2 are therefore ONE narrow Arrow pass
+over the pages table (no shuffle until the canonicalization groupBy),
+which is what survives a 10^12-document scan: the cost is a single read of
+the html column + CPU, embarrassingly parallel. The DuckDB oracles in
+``queries.py`` are the independent reference for every facet.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
+import re
 from typing import Iterator, Optional
+from urllib.parse import urljoin
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -28,6 +38,7 @@ from .csvw.model import load_metadata
 from .operators.triples import (TRIPLE_SCHEMA, TripleKernel,
                                 compile_mapping)
 from .session import ensure_package_on_executors
+from .sources.html_extract import map_pages, table_rows
 
 KG_MENTIONS = "https://kg.example.org/ontology#mentions"
 KG_RELATED = "https://kg.example.org/ontology#relatedTo"
@@ -47,6 +58,112 @@ def _kernel_for_meta(meta_json: str, minimal: bool) -> TripleKernel:
     return k
 
 
+RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
+_IRI_RE = re.compile(r"^https?://")
+_VOCAB_RE = re.compile(r"^(.*/)[^/]*$")
+
+# Per-page facet emitters for ``map_pages``: ``emit(row, page)`` → the
+# page's TRIPLE_SCHEMA tuples, with ``table_url`` = page url. ``source_num``
+# keeps the facets apart: table rows are 1-based physical rows, microdata
+# and RDFa are 0, JSON-LD blocks are -1, -2, ...
+
+
+def _skolem(url: str, kind: str, label: str) -> str:
+    """Deterministic url-scoped blank-node id (the process hash is
+    randomized, so Python's hash() would differ across executors)."""
+    return f"_:{kind}-{hashlib.sha1(url.encode()).hexdigest()[:10]}-{label}"
+
+
+def _table_triples(default_meta: Optional[dict], minimal: bool,
+                   header_rows: int):
+    """CSVW-table emitter: per-page metadata comes from the embedded
+    ``<script type="application/csvw+json">`` block, else ``default_meta``;
+    pages with neither emit nothing."""
+    default_meta_json = json.dumps(default_meta) if default_meta else None
+
+    def emit(row, page):
+        meta_json = page.csvw_meta or default_meta_json
+        if meta_json is None:
+            return []
+        tk = _kernel_for_meta(meta_json, minimal)
+        url = row.url
+        return [t + (url, source_num)
+                for _, values, row_num, source_num
+                in table_rows(page, header_rows)
+                for t in tk.row_triples(values, row_num, source_num, url=url)]
+    return emit
+
+
+def _microdata_triples(row, page):
+    """Microdata emitter: property IRIs resolve against the item's
+    vocabulary (itemtype base, else the page url + '#'), each distinct
+    (item, itemtype) becomes one rdf:type triple, and values that look like
+    IRIs stay IRIs."""
+    url = row.url
+    out = []
+    seen_types = set()
+    for item in page.microdata:
+        iid = item.item_id
+        if iid.startswith("_:"):
+            iid = _skolem(url, "md", iid[2:])
+        m = _VOCAB_RE.match(item.itemtype or "")
+        vocab = (m.group(1) if m else "") or url + "#"
+        for prop, value in item.props:
+            pred = prop if _IRI_RE.match(prop) else vocab + prop
+            out.append((iid, pred, value, bool(_IRI_RE.match(value)),
+                        None, None, url, 0))
+        if item.itemtype and (iid, item.itemtype) not in seen_types:
+            seen_types.add((iid, item.itemtype))
+            out.append((iid, RDF_TYPE, item.itemtype, True, None, None,
+                        url, 0))
+    return out
+
+
+def _jsonld_triples(row, page):
+    """JSON-LD emitter: each ``application/ld+json`` block expands via
+    ``sources.jsonld.expand_jsonld``; block i gets ``source_num`` -(i+1)."""
+    from .sources.jsonld import expand_jsonld
+    url = row.url
+    return [t + (url, -(i + 1))
+            for i, block in enumerate(page.jsonld)
+            for t in expand_jsonld(block, url)]
+
+
+def _rdfa_triples(row, page):
+    """RDFa-lite emitter: predicates and types arrive vocab/prefix-expanded
+    from the parser; fragment subjects (``#x``) resolve against the page
+    url, each distinct typeof token becomes one rdf:type triple (also for a
+    scope with no properties), and values that look like IRIs stay IRIs."""
+    url = row.url
+    out = []
+    seen_types = set()
+    for item in page.rdfa:
+        subj = item.subject
+        if subj.startswith("_:"):
+            subj = _skolem(url, "ra", subj[2:])
+        elif subj.startswith("#"):
+            subj = url + subj
+        for prop, value in item.props:
+            out.append((subj, prop, value, bool(_IRI_RE.match(value)),
+                        None, None, url, 0))
+        for t in item.types.split():
+            if (subj, t) not in seen_types:
+                seen_types.add((subj, t))
+                out.append((subj, RDF_TYPE, t, True, None, None, url, 0))
+    return out
+
+
+def _facets(*emitters, respect_noindex: bool = False):
+    """Several facet emitters run in sequence on one parsed page; with
+    ``respect_noindex`` a page whose robots meta says noindex emits
+    nothing (checked on the same parse, no second pass or join)."""
+    def emit(row, page):
+        if respect_noindex and _page_noindex(page):
+            return []
+        return [t for e in emitters for t in e(row, page)]
+    return emit
+
+
 def pages_to_triples(pages: DataFrame, minimal: bool = True,
                      default_meta: Optional[dict] = None,
                      header_rows: int = 1) -> DataFrame:
@@ -57,179 +174,25 @@ def pages_to_triples(pages: DataFrame, minimal: bool = True,
     ``default_meta``); kernels are compiled once per distinct metadata
     document and reused across pages (cache hit ≈ always at web scale).
     """
-    spark = pages.sparkSession
-    ensure_package_on_executors(spark)
-    default_meta_json = json.dumps(default_meta) if default_meta else None
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .sources.html_extract import extract_page, _decode
-        cols = ["subj", "pred", "obj", "obj_is_iri", "obj_datatype", "obj_lang"]
-        for pdf in batches:
-            out: list[tuple] = []
-            urls: list[str] = []
-            srcs: list[int] = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                page = extract_page(_decode(html))
-                _emit_table_triples(page, url, default_meta_json, minimal,
-                                    header_rows, out, urls, srcs)
-            res = pd.DataFrame(out, columns=cols)
-            res["table_url"] = pd.Series(urls, dtype="object")
-            res["source_num"] = pd.Series(srcs, dtype="int64")
-            yield res
-
-    return pages.mapInPandas(kernel, schema=TRIPLE_SCHEMA)
-
-
-RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-
-
-def _emit_table_triples(page, url: str, default_meta_json: Optional[str],
-                        minimal: bool, header_rows: int,
-                        out: list, urls: list, srcs: list) -> None:
-    """Shared per-page CSVW-table emission (single source of truth for the
-    single-facet and fused kernels)."""
-    meta_json = page.csvw_meta or default_meta_json
-    if meta_json is None:
-        return
-    tk = _kernel_for_meta(meta_json, minimal)
-    for t in page.tables:
-        for i, row in enumerate(t.rows):
-            if i < header_rows:
-                continue
-            ts = tk.row_triples(row, i - header_rows + 1, i + 1, url=url)
-            out.extend(ts)
-            urls.extend([url] * len(ts))
-            srcs.extend([i + 1] * len(ts))
-
-
-def _emit_microdata_triples(page, url: str,
-                            out: list, urls: list, srcs: list) -> None:
-    """Shared per-page microdata emission — mirrors the Column projection in
-    :func:`microdata_to_triples` exactly (pred vocab resolution, skolem ids,
-    per-(item,type,url) dedup == the projection's distinct, and NULL
-    obj_is_iri for a NULL value, matching ``rlike`` null semantics).
-    Multiset parity between this and the projection path is CI-tested."""
-    import hashlib
-    import re
-    iri_re = re.compile(r"^https?://")
-    vocab_re = re.compile(r"^(.*/)[^/]*$")
-    uh = None
-    seen_types: set[tuple] = set()
-    n_md = 0
-    for item in page.microdata:
-        iid = item.item_id
-        if iid.startswith("_:"):
-            if uh is None:
-                uh = hashlib.sha1(url.encode()).hexdigest()[:10]
-            iid = f"_:md-{uh}-{item.item_id[2:]}"
-        m = vocab_re.match(item.itemtype or "")
-        vocab = m.group(1) if m else ""
-        for prop, value in item.props:
-            pred = prop if iri_re.match(prop) else (vocab or url + "#") + prop
-            out.append((iid, pred, value,
-                        None if value is None else bool(iri_re.match(value)),
-                        None, None))
-            n_md += 1
-        if item.itemtype and (iid, item.itemtype) not in seen_types:
-            seen_types.add((iid, item.itemtype))
-            out.append((iid, RDF_TYPE, item.itemtype, True, None, None))
-            n_md += 1
-    urls.extend([url] * n_md)
-    srcs.extend([0] * n_md)
-
-
-def _emit_jsonld_triples(page, url: str,
-                         out: list, urls: list, srcs: list) -> None:
-    """Shared per-page JSON-LD emission — same expansion as
-    :func:`pages_to_jsonld_triples` (sources/jsonld.expand_jsonld), with
-    ``source_num`` = block index offset by -1..: blocks use negative
-    source_nums (-1, -2, ...) so they never collide with table source rows
-    or the microdata 0 sentinel."""
-    from .sources.jsonld import expand_jsonld
-    for i, block in enumerate(page.jsonld):
-        ts = expand_jsonld(block, url)
-        out.extend(ts)
-        urls.extend([url] * len(ts))
-        srcs.extend([-(i + 1)] * len(ts))
-
-
-def _emit_rdfa_triples(page, url: str,
-                       out: list, urls: list, srcs: list) -> None:
-    """Shared per-page RDFa-lite emission — same subject resolution and
-    IRI detection as :func:`rdfa_to_triples` (set-parity CI-tested);
-    ``source_num`` 0 like the microdata facet."""
-    import hashlib
-    import re as _re
-    seen_types = set()
-    for item in page.rdfa:
-        subj = item.subject
-        if subj.startswith("_:"):
-            uh = hashlib.sha1(url.encode()).hexdigest()[:10]
-            subj = f"_:ra-{uh}-{item.subject[2:]}"
-        elif subj.startswith("#"):
-            subj = url + subj
-        for prop, value in item.props:
-            out.append((subj, prop, value,
-                        bool(_re.match(r"https?://", value)), None, None))
-            urls.append(url)
-            srcs.append(0)
-        for t in item.types.split():
-            if (subj, t) in seen_types:
-                continue
-            seen_types.add((subj, t))
-            out.append((subj, RDF_TYPE, t, True, None, None))
-            urls.append(url)
-            srcs.append(0)
+    return map_pages(pages, _table_triples(default_meta, minimal,
+                                           header_rows), TRIPLE_SCHEMA)
 
 
 def pages_to_combined_triples(pages: DataFrame, minimal: bool = True,
                               default_meta: Optional[dict] = None,
                               header_rows: int = 1,
                               respect_noindex: bool = False) -> DataFrame:
-    """Stages 1+1b+1d+1e+2 in ONE Arrow pass: each page's HTML is parsed
-    ONCE and the CSVW-table triples, the microdata triples, the embedded
-    JSON-LD triples, and the RDFa-lite triples are all emitted from the
-    same ``extract_page`` result.
-
-    The separate operators (:func:`pages_to_triples`,
-    :func:`microdata_to_triples`) parse every page twice — two full scans
-    of the corpus and two HTML parses per page, plus a distinct-shuffle
-    for the microdata type triples. At 10^12 documents stage 1 is the
-    dominant cost, so the pipeline uses this fused kernel; the separate
-    operators remain the oracle-checked single-facet tiers, and
-    set-parity between the two paths is CI-tested
-    (test_web_pipeline.test_combined_parity). The in-kernel per-page type
-    dedup is equivalent to the projection's distinct over
-    (item_id, itemtype, url): skolemized item ids are url-scoped and the
-    distinct includes the url."""
-    spark = pages.sparkSession
-    ensure_package_on_executors(spark)
-    default_meta_json = json.dumps(default_meta) if default_meta else None
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .sources.html_extract import extract_page, _decode
-        cols = ["subj", "pred", "obj", "obj_is_iri", "obj_datatype", "obj_lang"]
-        for pdf in batches:
-            out: list[tuple] = []
-            urls: list[str] = []
-            srcs: list[int] = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                page = extract_page(_decode(html))
-                # robots compliance INSIDE the one parse — a pre-filter
-                # would cost a second full parse pass + a semi-join
-                if respect_noindex and _page_noindex(page):
-                    continue
-                _emit_table_triples(page, url, default_meta_json, minimal,
-                                    header_rows, out, urls, srcs)
-                _emit_microdata_triples(page, url, out, urls, srcs)
-                _emit_jsonld_triples(page, url, out, urls, srcs)
-                _emit_rdfa_triples(page, url, out, urls, srcs)
-            res = pd.DataFrame(out, columns=cols)
-            res["table_url"] = pd.Series(urls, dtype="object")
-            res["source_num"] = pd.Series(srcs, dtype="int64")
-            yield res
-
-    return pages.mapInPandas(kernel, schema=TRIPLE_SCHEMA)
+    """Stages 1+1b+1d+1e+2 in ONE Arrow pass: each page is parsed once and
+    the table, microdata, JSON-LD and RDFa emitters run in sequence on the
+    parse. Each single-facet operator (:func:`pages_to_triples`,
+    :func:`microdata_to_triples`, :func:`pages_to_jsonld_triples`,
+    :func:`rdfa_to_triples`) runs one of the same emitters, so the fused
+    output is their union by construction; the DuckDB oracles in
+    ``queries.py`` check each facet independently."""
+    return map_pages(pages, _facets(
+        _table_triples(default_meta, minimal, header_rows),
+        _microdata_triples, _jsonld_triples, _rdfa_triples,
+        respect_noindex=respect_noindex), TRIPLE_SCHEMA)
 
 
 def microdata_to_triples(pages: DataFrame) -> DataFrame:
@@ -237,72 +200,15 @@ def microdata_to_triples(pages: DataFrame) -> DataFrame:
 
     Property IRIs resolve against the item's vocabulary (itemtype base, e.g.
     http://schema.org/), itemtype becomes an rdf:type triple, and values that
-    look like IRIs stay IRIs. Narrow: extraction is the same Arrow kernel as
-    the table path (sources/html_extract.pages_to_microdata), this is a pure
-    projection on top.
-    """
-    from .sources.html_extract import pages_to_microdata
-    md = pages_to_microdata(pages)
-    vocab = F.regexp_extract("itemtype", r"^(.*/)[^/]*$", 1)
-    pred = F.when(F.col("prop").rlike("^https?://"), F.col("prop")) \
-        .otherwise(F.concat(F.when(vocab == "", F.concat(F.col("url"), F.lit("#")))
-                            .otherwise(vocab), F.col("prop")))
-    obj_is_iri = F.col("value").rlike("^https?://")
-    props = md.select(
-        F.col("item_id").alias("subj"), pred.alias("pred"),
-        F.col("value").alias("obj"), obj_is_iri.alias("obj_is_iri"),
-        F.lit(None).cast("string").alias("obj_datatype"),
-        F.lit(None).cast("string").alias("obj_lang"),
-        F.col("url").alias("table_url"),
-        F.lit(0).cast("long").alias("source_num"))
-    types = (md.filter(F.col("itemtype") != "")
-             .select("item_id", "itemtype", "url").distinct()
-             .select(F.col("item_id").alias("subj"),
-                     F.lit(RDF_TYPE).alias("pred"),
-                     F.col("itemtype").alias("obj"),
-                     F.lit(True).alias("obj_is_iri"),
-                     F.lit(None).cast("string").alias("obj_datatype"),
-                     F.lit(None).cast("string").alias("obj_lang"),
-                     F.col("url").alias("table_url"),
-                     F.lit(0).cast("long").alias("source_num")))
-    return props.unionByName(types)
+    look like IRIs stay IRIs. Blank item ids skolemize per url."""
+    return map_pages(pages, _microdata_triples, TRIPLE_SCHEMA)
 
 
 def rdfa_to_triples(pages: DataFrame) -> DataFrame:
     """Stage 1d: RDFa-lite scopes → triples (the fourth structured-data
-    facet next to tables, microdata, and JSON-LD).
-
-    Predicates and types arrive already vocab/prefix-expanded from the
-    parser; here fragment subjects (``#x``) resolve against the page url,
-    each typeof token becomes one rdf:type triple, and values that look
-    like IRIs stay IRIs.  Pure projection over the Arrow kernel
-    (sources/html_extract.pages_to_rdfa) — same narrow discipline as
-    :func:`microdata_to_triples`.
-    """
-    from .sources.html_extract import pages_to_rdfa
-    rd = pages_to_rdfa(pages)
-    subj = F.when(F.col("subject").startswith("#"),
-                  F.concat(F.col("url"), F.col("subject"))) \
-        .otherwise(F.col("subject"))
-    obj_is_iri = F.col("value").rlike("^https?://")
-    props = rd.filter(F.col("prop").isNotNull()).select(
-        subj.alias("subj"), F.col("prop").alias("pred"),
-        F.col("value").alias("obj"), obj_is_iri.alias("obj_is_iri"),
-        F.lit(None).cast("string").alias("obj_datatype"),
-        F.lit(None).cast("string").alias("obj_lang"),
-        F.col("url").alias("table_url"),
-        F.lit(0).cast("long").alias("source_num"))
-    types = (rd.filter(F.col("typeof") != "")
-             .select(subj.alias("subj"),
-                     F.explode(F.split("typeof", " ")).alias("obj"), "url")
-             .distinct()
-             .select("subj", F.lit(RDF_TYPE).alias("pred"), "obj",
-                     F.lit(True).alias("obj_is_iri"),
-                     F.lit(None).cast("string").alias("obj_datatype"),
-                     F.lit(None).cast("string").alias("obj_lang"),
-                     F.col("url").alias("table_url"),
-                     F.lit(0).cast("long").alias("source_num")))
-    return props.unionByName(types)
+    facet next to tables, microdata, and JSON-LD); see
+    :func:`_rdfa_triples` for the subject and type rules."""
+    return map_pages(pages, _rdfa_triples, TRIPLE_SCHEMA)
 
 
 def link_entities(triples: DataFrame, entity_dict: dict[str, str],
@@ -415,25 +321,11 @@ def pages_to_links(pages: DataFrame,
     crawler-compliance contract — inside the same parse (no extra scan,
     no join against the head-meta table).
     """
-    spark = pages.sparkSession
-    ensure_package_on_executors(spark)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from urllib.parse import urljoin
-
-        from .sources.html_extract import _decode, extract_page
-        for pdf in batches:
-            src, dst = [], []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                page = extract_page(_decode(html))
-                if respect_nofollow and _page_nofollow(page):
-                    continue
-                for href in page.links:
-                    src.append(url)
-                    dst.append(urljoin(url, href))
-            yield pd.DataFrame({"src": src, "dst": dst})
-
-    return pages.mapInPandas(kernel, schema=LINKS_SCHEMA)
+    def emit(row, page):
+        if respect_nofollow and _page_nofollow(page):
+            return []
+        return [(row.url, urljoin(row.url, href)) for href in page.links]
+    return map_pages(pages, emit, LINKS_SCHEMA)
 
 
 ANCHORS_SCHEMA = "src string, dst string, anchor string"
@@ -446,23 +338,12 @@ def pages_to_anchors(pages: DataFrame) -> DataFrame:
     aggregated downstream per dst. Same single-parse kernel, narrow, no
     shuffle; unclosed anchors (no text boundary) are skipped, matching
     PageContent.anchors semantics."""
-    spark = pages.sparkSession
-    ensure_package_on_executors(spark)
+    return map_pages(pages, _anchor_rows, ANCHORS_SCHEMA)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from urllib.parse import urljoin
 
-        from .sources.html_extract import _decode, extract_page
-        for pdf in batches:
-            src, dst, anchor = [], [], []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                for href, text in extract_page(_decode(html)).anchors:
-                    src.append(url)
-                    dst.append(urljoin(url, href))
-                    anchor.append(text)
-            yield pd.DataFrame({"src": src, "dst": dst, "anchor": anchor})
-
-    return pages.mapInPandas(kernel, schema=ANCHORS_SCHEMA)
+def _anchor_rows(row, page):
+    return [(row.url, urljoin(row.url, href), text)
+            for href, text in page.anchors]
 
 
 def anchor_labels(anchors: DataFrame, min_refs: int = 1) -> DataFrame:
@@ -506,26 +387,7 @@ def pages_to_jsonld_triples(pages: DataFrame) -> DataFrame:
     microdata 0 sentinel, and identical to the fused kernel's numbering),
     so the store / canonicalization stages downstream are shared verbatim.
     """
-    spark = pages.sparkSession
-    ensure_package_on_executors(spark)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .sources.html_extract import _decode, extract_page
-        for pdf in batches:
-            out: list[tuple] = []
-            urls: list[str] = []
-            srcs: list[int] = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                _emit_jsonld_triples(extract_page(_decode(html)), url,
-                                     out, urls, srcs)
-            cols = ["subj", "pred", "obj", "obj_is_iri", "obj_datatype",
-                    "obj_lang"]
-            res = pd.DataFrame(out, columns=cols)
-            res["table_url"] = pd.Series(urls, dtype="object")
-            res["source_num"] = pd.Series(srcs, dtype="int64")
-            yield res
-
-    return pages.mapInPandas(kernel, schema=TRIPLE_SCHEMA)
+    return map_pages(pages, _jsonld_triples, TRIPLE_SCHEMA)
 
 
 HEAD_META_SCHEMA = ("url string, title string, canonical string, "
@@ -545,27 +407,14 @@ def pages_to_head_meta(pages: DataFrame) -> DataFrame:
     and robots directives are the first curation gate; both need only
     this narrow single-parse stage — no shuffle.
     """
-    spark = pages.sparkSession
-    ensure_package_on_executors(spark)
+    return map_pages(pages, _head_meta_row, HEAD_META_SCHEMA)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from urllib.parse import urljoin
 
-        from .sources.html_extract import _decode, extract_page
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                page = extract_page(_decode(html))
-                directives = _robots_directives(page)
-                rows.append((url, page.title,
-                             urljoin(url, page.canonical)
-                             if page.canonical else None,
-                             "noindex" in directives,
-                             "nofollow" in directives))
-            yield pd.DataFrame(rows, columns=["url", "title", "canonical",
-                                              "noindex", "nofollow"])
-
-    return pages.mapInPandas(kernel, schema=HEAD_META_SCHEMA)
+def _head_meta_row(row, page):
+    directives = _robots_directives(page)
+    canonical = urljoin(row.url, page.canonical) if page.canonical else None
+    return [(row.url, page.title, canonical,
+             "noindex" in directives, "nofollow" in directives)]
 
 
 OG_NS = "https://ogp.me/ns#"
@@ -581,24 +430,13 @@ def pages_to_og_triples(pages: DataFrame) -> DataFrame:
     subject is the page URL itself (OpenGraph describes the page). Narrow
     Arrow stage, TRIPLE_SCHEMA output, ``source_num`` = position within
     the page's og tags."""
-    spark = pages.sparkSession
-    ensure_package_on_executors(spark)
+    return map_pages(pages, _og_triples, TRIPLE_SCHEMA)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .sources.html_extract import _decode, extract_page
-        cols = [f.name for f in TRIPLE_SCHEMA]
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                n = 0
-                for k, v in extract_page(_decode(html)).meta:
-                    if k.startswith("og:"):
-                        n += 1
-                        rows.append((url, OG_NS + k[3:], v, False,
-                                     None, None, url, n))
-            yield pd.DataFrame(rows, columns=cols)
 
-    return pages.mapInPandas(kernel, schema=TRIPLE_SCHEMA)
+def _og_triples(row, page):
+    og = [(k, v) for k, v in page.meta if k.startswith("og:")]
+    return [(row.url, OG_NS + k[3:], v, False, None, None, row.url, n)
+            for n, (k, v) in enumerate(og, 1)]
 
 
 def canonical_groups(head_meta: DataFrame) -> DataFrame:
@@ -822,17 +660,14 @@ def web_pipeline(spark: SparkSession, pages: DataFrame, out_root: str,
                            out_root, batch_id)  # no-op resume hit
     held: list = []
     if include_microdata:
-        # fused single-parse kernel: tables + microdata + JSON-LD from ONE
-        # scan, robots-noindex compliance checked inside the same parse
+        # fused single-parse kernel: every triple facet from ONE scan,
+        # robots-noindex compliance checked inside the same parse
         triples = pages_to_combined_triples(pages, default_meta=default_meta,
                                             respect_noindex=respect_noindex)
     else:
-        triples = pages_to_triples(pages, default_meta=default_meta)
-        if respect_noindex:
-            keep = pages_to_head_meta(pages).where("not noindex") \
-                .select("url")
-            triples = triples.join(
-                keep, triples["table_url"] == keep["url"], "left_semi")
+        triples = map_pages(pages, _facets(
+            _table_triples(default_meta, True, 1),
+            respect_noindex=respect_noindex), TRIPLE_SCHEMA)
     if entity_dict:
         # branch point: the mention scan AND the final union both read the
         # base triples — without a persist, link_entities' lineage re-runs

@@ -294,3 +294,34 @@ def test_cell_coercion_memo_identical_across_rows():
     for i in range(20):
         k._coerce_cell(str(i), k.cols[0].plan)
     assert len(k._cell_cache) <= 8
+
+
+@pytest.mark.parametrize("column, cell, expected", [
+    # empty cell under a non-empty `null`: element default, no error
+    ({"name": "v", "datatype": "integer", "null": "NA"}, ",", []),
+    # missing cell: null, no error
+    ({"name": "v", "datatype": "integer", "null": "NA"}, "", []),
+    # trim=false keeps the leading space, so the length facet fails
+    ({"name": "v", "datatype": {"base": "string", "maxLength": 2}}, ", ab",
+     [" ab does not have length <= 2"]),
+], ids=["empty-cell-null-NA", "missing-cell-null-NA", "untrimmed-maxLength"])
+def test_validate_table_matches_conversion_coercion(spark, tmp_path, column,
+                                                    cell, expected):
+    """validate_table reports exactly the errors the conversion kernel's
+    cell coercion (TripleKernel._coerce_cell) reports for the same cell."""
+    from rdf_tabular_spark.csvw.model import load_metadata
+    from rdf_tabular_spark.operators.triples import TripleKernel, compile_mapping
+    from rdf_tabular_spark.pipeline import validate_table
+
+    csv = tmp_path / "t.csv"
+    csv.write_text(f"id,v\n1{cell}\n")
+    table = load_metadata({"url": "t.csv", "dialect": {"trim": False},
+                           "tableSchema": {"columns": [{"name": "id"},
+                                                       column]}},
+                          base=str(csv))
+    errs = [r["error"] for r in
+            validate_table(spark, table, resolver=lambda u: str(csv)).collect()]
+    assert errs == expected
+    k = TripleKernel(compile_mapping(table, minimal=True))
+    raw = cell[1:] if cell else None
+    assert k._coerce_cell(raw, k.cols[1].plan)[2] == expected

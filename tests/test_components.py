@@ -80,11 +80,17 @@ def test_signature_edges_broadcast_and_shuffle_paths_agree(spark):
         [(f"s{i}", "tok0|tok1|tok2|tok3|" + (f"x{i}" if i % 2 else "x0"))
          for i in range(30)],
         "subj string, profile string")
+    jsc = spark.sparkContext._jsc
+    # compared by id: the JVM map holds its RDDs weakly, so an earlier
+    # test's cached RDD may be collected mid-test and lower the size
+    baseline = set(jsc.getPersistentRDDs())
     sigs = M.minhash_signatures(docs, "subj", "profile", num_perm=16,
                                 token_sep="|").persist()
+    releases = []
+
     def edge_set():
         return {(r["a"], r["b"]) for r in M.signature_similarity_edges(
-            sigs, num_bands=4, threshold=0.5).collect()}
+            sigs, num_bands=4, threshold=0.5, releases=releases).collect()}
     bc = edge_set()
     old = M.BROADCAST_PAIRS_MAX
     M.BROADCAST_PAIRS_MAX = 0          # force the shuffle tier
@@ -93,4 +99,10 @@ def test_signature_edges_broadcast_and_shuffle_paths_agree(spark):
     finally:
         M.BROADCAST_PAIRS_MAX = old
     assert bc == sh and bc            # non-empty and identical
+    # every persist made inside is handed to the caller: releasing them
+    # (and the caller's own sigs) returns storage to the baseline
+    assert releases
+    for df in releases:
+        df.unpersist()
     sigs.unpersist()
+    assert set(jsc.getPersistentRDDs()) <= baseline

@@ -88,3 +88,24 @@ def test_multiline_with_header_and_skip(spark, tmp_path):
     d = Dialect(skipRows=1)  # comment + header both consumed (skipped_rows=2)
     got = _rows(spark, p, d)
     assert got == [(["x\ny", "1"], 1, 3)]
+
+
+def test_comment_rows_test_raw_line_on_both_read_paths(spark, tmp_path):
+    """commentPrefix is matched against the raw source line, not the parsed
+    first cell: '"#x",y' is data, '#x,y' is a comment. The whole-file path
+    (forced by a quoted embedded newline) and the line path agree."""
+    from rdf_tabular_spark.sources.csv_source import _read_rows_whole_file
+    d = Dialect(commentPrefix="#")
+    multi = tmp_path / "multi.csv"
+    multi.write_text('a,b\n"#x",y\n#x,y\n"m\nn",z\n')
+    assert _has_quoted_newline(str(multi), d)
+    assert _rows(spark, multi, d) == [(["#x", "y"], 1, 2),
+                                      (["m\nn", "z"], 2, 4)]
+    plain = tmp_path / "plain.csv"
+    plain.write_text('a,b\n"#x",y\n#x,y\nmn,z\n')
+    assert not _has_quoted_newline(str(plain), d)
+    whole = sorted(((list(r["values"]), r["row_num"], r["source_num"])
+                    for r in _read_rows_whole_file(spark, str(plain), d)
+                    .collect()), key=lambda t: t[2])
+    assert _rows(spark, plain, d) == whole == [(["#x", "y"], 1, 2),
+                                               (["mn", "z"], 2, 4)]

@@ -86,7 +86,7 @@ def test_rdfa_triple_face_and_fused_parity(spark):
 def test_rdfa_typeof_only_scope_keeps_type_triples(spark):
     """A typeof scope with NO property elements must still yield its
     rdf:type triples in BOTH the single-facet and fused paths (r5 advice:
-    the pages_to_rdfa kernel previously emitted no rows for such a scope,
+    the single-facet kernel once emitted no rows for such a scope,
     silently dropping the types the fused path did emit)."""
     from rdf_tabular_spark.web import pages_to_combined_triples, rdfa_to_triples
     page = ('<div vocab="http://schema.org/" typeof="Person" '

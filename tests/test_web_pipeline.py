@@ -16,14 +16,14 @@ from pyspark.sql import functions as F
 
 from rdf_tabular_spark.sources.html_extract import (extract_page,
                                                     pages_to_text,
-                                                    pages_to_virtual_rows,
-                                                    pages_to_microdata)
+                                                    pages_to_virtual_rows)
 from rdf_tabular_spark.sources.pages import (build_page_html, entity_dictionary,
                                              synth_pages, _page_rows)
 from rdf_tabular_spark.web import (canonicalize_subjects, link_entities,
                                    pages_to_triples, web_pipeline)
 
 N_PAGES = 200
+RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
 
 @pytest.fixture(scope="module")
@@ -60,11 +60,13 @@ def test_virtual_rows(pages):
 
 
 def test_microdata(pages):
-    md = pages_to_microdata(pages)
-    rows = md.limit(10).collect()
+    from rdf_tabular_spark.web import microdata_to_triples
+    rows = microdata_to_triples(pages).collect()
     assert rows
-    assert all(r["itemtype"] == "http://schema.org/Place" for r in rows)
-    assert {r["prop"] for r in rows} <= {"name", "containsPlace"}
+    types = {r["obj"] for r in rows if r["pred"] == RDF_TYPE}
+    assert types == {"http://schema.org/Place"}
+    assert {r["pred"] for r in rows if r["pred"] != RDF_TYPE} <= {
+        "http://schema.org/name", "http://schema.org/containsPlace"}
 
 
 def test_web_triples_match_csv_pipeline(spark, tmp_path):
@@ -658,3 +660,49 @@ def test_latest_snapshot_property(spark):
     assert got == {u: t for u, (_, t) in model.items()}
     twice = {r["url"]: r["text"] for r in latest_snapshot(once).collect()}
     assert twice == got
+
+
+def _facet_cases():
+    from pyspark.sql.types import StructType
+
+    from rdf_tabular_spark import web
+    from rdf_tabular_spark.operators.triples import TRIPLE_SCHEMA
+    from rdf_tabular_spark.sources import html_extract as H
+    ddl = StructType.fromDDL
+    # facet → (operator, declared schema, rows per facet-free page)
+    return {
+        "pages_to_triples": (web.pages_to_triples, TRIPLE_SCHEMA, 0),
+        "pages_to_combined_triples": (web.pages_to_combined_triples,
+                                      TRIPLE_SCHEMA, 0),
+        "microdata_to_triples": (web.microdata_to_triples, TRIPLE_SCHEMA, 0),
+        "rdfa_to_triples": (web.rdfa_to_triples, TRIPLE_SCHEMA, 0),
+        "pages_to_jsonld_triples": (web.pages_to_jsonld_triples,
+                                    TRIPLE_SCHEMA, 0),
+        "pages_to_og_triples": (web.pages_to_og_triples, TRIPLE_SCHEMA, 0),
+        "pages_to_links": (web.pages_to_links, ddl(web.LINKS_SCHEMA), 0),
+        "pages_to_anchors": (web.pages_to_anchors, ddl(web.ANCHORS_SCHEMA), 0),
+        # one row per page by definition, even without any facet
+        "pages_to_head_meta": (web.pages_to_head_meta,
+                               ddl(web.HEAD_META_SCHEMA), 1),
+        "pages_to_text": (H.pages_to_text, H.EXTRACTED_TEXT_SCHEMA, 1),
+        "pages_to_virtual_rows": (H.pages_to_virtual_rows,
+                                  H.VIRTUAL_ROWS_SCHEMA, 0),
+    }
+
+
+@pytest.mark.parametrize("facet", [
+    "pages_to_triples", "pages_to_combined_triples", "microdata_to_triples",
+    "rdfa_to_triples", "pages_to_jsonld_triples", "pages_to_og_triples",
+    "pages_to_links", "pages_to_anchors", "pages_to_head_meta",
+    "pages_to_text", "pages_to_virtual_rows"])
+@pytest.mark.parametrize("input_kind", ["facet_free_page", "no_pages"])
+def test_map_pages_facets_on_empty_input(spark, facet, input_kind):
+    """Every map_pages-backed facet keeps its declared schema when a batch
+    emits nothing: a page without any facet and an empty pages frame."""
+    operator, declared, per_page = _facet_cases()[facet]
+    rows = ([("http://x.org/p", bytearray(b"<html><body>x</body></html>"),
+              "en")] if input_kind == "facet_free_page" else [])
+    pages = spark.createDataFrame(rows, "url string, html binary, lang string")
+    out = operator(pages)
+    assert out.schema == declared
+    assert len(out.collect()) == (per_page if rows else 0)
