@@ -30,7 +30,7 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 N_PAGES = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", "64000"))
 
 # Headline mix: CSVW kernel, scan→agg, broadcast join, window, dedup LSH,
-# text scoring, ANN. Quadratic verification baselines are excluded — they
+# text scoring. Quadratic verification baselines are excluded — they
 # are correctness oracles, not the scale path.
 BENCH_QUERIES = [
     "kg_pages_triples",
@@ -47,12 +47,6 @@ BENCH_QUERIES = [
     "dedup_substring_spans",
     "text_quality",
     "text_langid",
-    "ann_cosine_topk",
-    "multimodal_features",
-    # round-5: REAL decode tier — synth BMP build + stdlib decode + pixel
-    # stats, one narrow Arrow stage (the throughput that matters for a
-    # multimodal curation pass)
-    "multimodal_decode",
     "text_pii_scrub",
     "pack_sequences",
     "corpus_curated",
@@ -95,12 +89,10 @@ BENCH_QUERIES = [
     "dedup_incremental_keep",
     "sample_mixture",
     # round-4 cont. 14 tier: fixed-round k-core peeling (eager per-round
-    # materialization), batch trained-IVF probe search (one pruned corpus
-    # pass for the whole query set), characteristic-set graph summary
+    # materialization), characteristic-set graph summary
     # (two narrow keyed shuffles), and brand-blocked Levenshtein ER over
     # the distinct-name vocabulary
     "graph_kcore",
-    "ann_ivf_batch_topk",
     "kg_characteristic_sets",
     "er_blocked_part_names",
     # round-4 cont. 15 tier: majority-vote fusion (two payload-free keyed

@@ -244,79 +244,6 @@ def simhash_near_pairs(df: DataFrame, id_col: str = "doc_id",
             .distinct())
 
 
-def embedding_cosine_pairs(df: DataFrame, id_col: str = "vec_id",
-                           vec_col: str = "embedding",
-                           threshold: float = 0.95) -> DataFrame:
-    """Embedding near-dup: all-pairs cosine ≥ threshold → (a, b, sim).
-
-    Brute-force tier (verification / small blocks). The scale path blocks
-    by coarse quantization first — see operators/similarity.py.
-    """
-    from .similarity import cosine_sim
-    v = df.select(F.col(id_col).cast("long").alias("id"),
-                  F.col(vec_col).cast("array<double>").alias("v"))
-    a, b = v.alias("a"), v.alias("b")
-    sim = cosine_sim(F.col("a.v"), F.col("b.v"))
-    return (a.join(b, F.col("a.id") < F.col("b.id"))
-            .select(F.col("a.id").alias("a"), F.col("b.id").alias("b"),
-                    F.round(sim, 4).alias("sim"))
-            .filter(F.col("sim") >= threshold))
-
-
-def semantic_dedup_pairs(df: DataFrame, k: int = 8, n_iter: int = 2,
-                         threshold: float = 0.95, id_col: str = "vec_id",
-                         vec_col: str = "embedding",
-                         dim: int | None = None) -> DataFrame:
-    """SemDeDup-style semantic near-dup (Abbas et al. 2023,
-    arXiv:2303.09540): cluster embeddings with the deterministic IVF fit,
-    then compute pairwise cosine ONLY within a cluster — the published
-    recipe's trick that turns O(n²) into Σ O(|cluster|²).
-
-    Returns (cell, a, b, sim) for within-cluster pairs with
-    round(cosine, 4) ≥ threshold, a < b.
-
-    Scale shape: the fit is k×dim doubles on the driver; assignment is one
-    codegen'd argmin projection (no shuffle); the self-join shuffles both
-    sides once on ``cell`` — with k sized so clusters fit an executor
-    (SemDeDup used k=50,000 for LAION-440M), no partition ever sees more
-    than one cluster's quadratic block. Skewed cells are AQE-splittable
-    since the join key is the cell id.
-    """
-    from .similarity import _as_double, cosine_sim, ivf_fit_deterministic
-    assigned, _ = ivf_fit_deterministic(df, k=k, n_iter=n_iter,
-                                        id_col=id_col, vec_col=vec_col,
-                                        dim=dim)
-    side = assigned.select(F.col("cell"),
-                           F.col(id_col).cast("long").alias("id"),
-                           _as_double(F.col(vec_col)).alias("v"))
-    a, b = side.alias("a"), side.alias("b")
-    sim = F.round(cosine_sim(F.col("a.v"), F.col("b.v")), 4)
-    return (a.join(b, "cell")
-            .where(F.col("a.id") < F.col("b.id"))
-            .select(F.col("cell"), F.col("a.id").alias("a"),
-                    F.col("b.id").alias("b"), sim.alias("sim"))
-            .where(F.col("sim") >= threshold))
-
-
-def semantic_dedup_keep(df: DataFrame, k: int = 8, n_iter: int = 2,
-                        threshold: float = 0.95, id_col: str = "vec_id",
-                        vec_col: str = "embedding",
-                        dim: int | None = None) -> DataFrame:
-    """The kept set under SemDeDup: drop every row that has a LOWER-id
-    semantic near-duplicate in its cluster (earliest-id-wins — the
-    deterministic stand-in for the paper's keep-farthest-from-centroid
-    tie-break; like the paper's greedy ε-ball sweep, a chain a~b~c with
-    a≁c keeps only ``a``). Broadcast anti-join on the (small) drop list —
-    the corpus never reshuffles."""
-    pairs = semantic_dedup_pairs(df, k=k, n_iter=n_iter,
-                                 threshold=threshold, id_col=id_col,
-                                 vec_col=vec_col, dim=dim)
-    drops = pairs.select(F.col("b").alias("_drop")).distinct()
-    return df.join(F.broadcast(drops),
-                   df[id_col].cast("long") == F.col("_drop"),
-                   "left_anti")
-
-
 SIMHASH48_BITS = 48
 
 

@@ -264,7 +264,7 @@ def discover_metadata(url: str, resolver: Resolver,
     (reference: Metadata.for_input, metadata.rb:139-194 — linked metadata is
     appended to found_metadata FIRST, i.e. highest found precedence)."""
     import os
-    from urllib.parse import urljoin
+    from urllib.parse import urljoin, urlsplit, urlunsplit
     from .csvw.model import load_json
     from .discovery import describedby_links
     out: list[tuple[dict, str]] = []
@@ -282,6 +282,16 @@ def discover_metadata(url: str, resolver: Resolver,
         if "://" in meta_url:
             return urljoin(meta_url, ref)
         return os.path.normpath(os.path.join(os.path.dirname(meta_url), ref))
+
+    def _normalize(u: str) -> str:
+        """One comparison form for the caller's url and each resolved table
+        url: dot segments removed for ``://`` urls, absolute for paths."""
+        if "://" in u:
+            parts = urlsplit(u)
+            return urlunsplit(parts._replace(path=urljoin("/", parts.path)))
+        return os.path.abspath(u)
+
+    target = _normalize(url)
 
     def _references(doc: dict, meta_url: str) -> bool:
         """W3C tabular-data-model §5.2/§5.3: discovered metadata that does
@@ -305,7 +315,7 @@ def discover_metadata(url: str, resolver: Resolver,
         for t in (doc.get("tables") or doc.get("resources") or []):
             if isinstance(t, dict) and isinstance(t.get("url"), str):
                 refs.append(t["url"])
-        return any(_resolve(base, r) == url for r in refs)
+        return any(_normalize(_resolve(base, r)) == target for r in refs)
 
     for cand in candidates:
         try:

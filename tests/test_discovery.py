@@ -103,6 +103,19 @@ def test_link_metadata_precedes_file_discovery(spark, tmp_path):
     assert preds == {"http://linked.org/a"}  # linked doc won the merge
 
 
+def test_discovery_normalizes_the_requested_url(tmp_path, monkeypatch):
+    """A relative, dot-segment or doubled-separator spelling of the CSV
+    path still matches the table url the discovered metadata references."""
+    monkeypatch.chdir(tmp_path)
+    (tmp_path / "d").mkdir()
+    _write(tmp_path / "d" / "data.csv", "a\nv1\n")
+    doc = _meta_doc("data.csv", "http://example.org/")
+    _write(tmp_path / "d" / "data.csv-metadata.json", json.dumps(doc))
+    for url in ("./d/data.csv", "d//data.csv"):
+        found = discover_metadata(url, lambda u: u)
+        assert [d for d, _ in found] == [doc], url
+
+
 def test_extensionless_tsv_routed_by_sniff(spark, tmp_path):
     tsv = _write(tmp_path / "data", "a\tb\nv1\tv2\n")
     df = csvw_to_triples(spark, tsv, minimal=True)

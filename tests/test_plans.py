@@ -89,15 +89,6 @@ def test_lsh_candidate_pairs_single_shuffle_of_bands(spark):
         assert "sig" not in keys, f"sig arrays shuffled: {keys}"
 
 
-def test_ann_lsh_bucket_topk_no_shuffle(spark):
-    """Bucketed ANN is a broadcast + partition-local filter + TakeOrdered:
-    zero Exchange nodes (the limit collapses to TakeOrderedAndProject)."""
-    p = plan_of(Q.queries()["ann_lsh_bucket_topk"](spark, SF))
-    assert "Exchange hashpartitioning" not in p, "bucketed ANN must not shuffle"
-    assert "TakeOrderedAndProject" in p
-    assert "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p
-
-
 def test_exact_dedup_no_forced_broadcast(spark):
     """The keep-id table is ~one row per distinct doc — forcing a broadcast
     OOMs at corpus scale; the join strategy must be left to AQE."""
@@ -156,21 +147,6 @@ def test_graph_store_read_predicate_prunes_buckets(spark, tmp_path):
     from rdf_tabular_spark.sinks.graph_store import read_graph
     expected = read_graph(spark, root).filter(F.col("pred") == pred).count()
     assert df.count() == expected > 0
-
-
-def test_ivf_partitioned_store_prunes_cells(spark, tmp_path):
-    """IVF-on-disk: probing 2 cells must produce a cell-pruned scan."""
-    from rdf_tabular_spark.operators.similarity import (ivf_index,
-                                                        ivf_read_cells,
-                                                        ivf_write_partitioned)
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    assigned, _ = ivf_index(emb, k=4)
-    path = str(tmp_path / "ivf")
-    ivf_write_partitioned(assigned, path)
-    df = ivf_read_cells(spark, path, [0, 1])
-    p = plan_of(df)
-    assert re.search(r"PartitionFilters: \[.*cell", p)
-    assert df.count() == assigned.filter(F.col("cell").isin([0, 1])).count()
 
 
 def test_combined_triples_is_shuffle_free(spark):
@@ -518,26 +494,6 @@ def test_retraction_read_broadcasts_delete_set(spark, tmp_path):
         "retraction read shuffled the data stream"
 
 
-def test_semantic_dedup_pairs_joins_on_cell_only(spark):
-    """SemDeDup's scale contract: the within-cluster self-join exchanges on
-    the CELL key only — at k sized to executor memory no partition ever
-    holds more than one cluster's quadratic block. The argmin assignment
-    is a projection (no exchange of its own beyond the join's)."""
-    from rdf_tabular_spark.operators.dedup import semantic_dedup_pairs
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    p = plan_of(semantic_dedup_pairs(emb, k=8, threshold=0.4, dim=64))
-    # the self-join must key on cell — as a shuffled hash join at scale, or
-    # (at tiny SF, where stats let one side broadcast) a broadcast join
-    # whose keys are still the cell
-    key_lines = re.findall(r"(?:Left|Right) keys \[\d+\]: \[([^\]]*)\]", p)
-    assert key_lines, "expected a keyed self-join"
-    for keys in key_lines:
-        assert keys.startswith("cell#"), keys
-    # no exchange may ever carry the raw vectors
-    for keys in re.findall(r"Exchange hashpartitioning\(([^)]*)\)", p):
-        assert "cell" in keys and "embedding" not in keys, keys
-
-
 def test_lm_score_broadcasts_model_tables(spark):
     """The fitted LM is broadcast (caps bound it regardless of corpus
     size); the only shuffle on the scoring path is the doc-key
@@ -706,25 +662,6 @@ def test_join_supplier_profit_broadcasts_all_dims(spark):
         "brand-prefix filter must reach the part scan (PushedFilters)"
     assert len(re.findall(r"\(\d+\) Exchange", p)) == 1, \
         "only the final groupBy may shuffle"
-
-
-def test_ann_cosine_batch_topk_one_scan_one_shuffle(spark):
-    """Batch ANN: the query frame broadcasts (one corpus scan scores every
-    query) and the only hash Exchange is the per-query window key — scored
-    thin rows, never embedding arrays."""
-    import re
-    p = plan_of(Q.queries()["ann_cosine_batch_topk"](spark, SF))
-    assert "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p, \
-        "query frame must broadcast"
-    assert len(re.findall(r"\(\d+\) Exchange\b", p)) == 1, \
-        "batch ANN must shuffle once (the per-query window key)"
-    assert re.search(r"hashpartitioning\(query_id", p)
-    for keys in re.findall(r"hashpartitioning\(([^)]*)\)", p):
-        assert "embedding" not in keys, f"embedding arrays shuffled: {keys}"
-    # map-side top-k: WindowGroupLimit prunes to k rows per query per
-    # partition BEFORE the Exchange, so the shuffle carries ~k·|Q| rows
-    # per task, not the scored corpus
-    assert "WindowGroupLimit" in p
 
 
 def test_incremental_dedup_thin_shuffles(spark):

@@ -15,7 +15,7 @@ from rdf_tabular_spark import queries as Q
 
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings")
+          "lineitem", "events", "documents")
 
 
 @pytest.fixture(scope="module")
@@ -61,6 +61,12 @@ def _assert_scalar_schema(qdf, name):
         "driver's pandas canonicalizer — project scalars (concat_ws)"
 
 
+def test_registry_and_oracles_cover_the_same_names():
+    # test_query_matches_oracle iterates over the oracles: a registry entry
+    # without one, or oracle SQL left behind by a deletion, would go unseen
+    assert set(Q.queries()) == set(Q.oracle_sql())
+
+
 @pytest.mark.parametrize("name", sorted(Q.oracle_sql()))
 def test_query_matches_oracle(spark, ddb, name):
     qdf = Q.queries()[name](spark, SF_DIR)
@@ -101,16 +107,20 @@ def test_entry_smoke(spark):
 # queries.py composes _QUERIES from the explicit _DRIVER_WINDOW list —
 # ~10 long-green sentinels + the newest / never-driver-swept tiers — so
 # every tier earns a green CORRECTNESS row within a round of landing.
-# This pin asserts the ROUND-5 composition: rotating next round means
-# editing queries._DRIVER_WINDOW and this list together, consciously.
+# This pin asserts the current composition: the sentinels, the remaining
+# csvw_* programs and the KG facet / canonicalization rows, then the
+# round-4/5 tiers. Rotating means editing queries._DRIVER_WINDOW and this
+# list together, consciously.
 _SWEEP_WINDOW = [
     # sentinels (driver-green in earlier rounds)
     "csvw_triples_nation", "kg_pages_triples", "dedup_exact",
     "agg_pricing_summary", "fk_orders_customer", "kg_microdata_triples",
-    "ann_cosine_topk",
-    # round-5 additions
-    "multimodal_decode", "multimodal_decode_audio",
-    "ann_recall_ivf", "ann_recall_pq",
+    # the paper's two paths: remaining CSVW programs, KG facets + canonical
+    "csvw_coerce_numeric", "csvw_date_format", "csvw_null_default_trim",
+    "csvw_json_rows", "csvw_list_split", "csvw_boolean_format",
+    "csvw_uri_template",
+    "kg_jsonld_triples", "kg_og_triples", "kg_page_meta",
+    "kg_canonicalized_triples",
     # round-4 tiers never swept before round 5
     "webtables_type_profile", "webtables_typed_triples",
     "webtables_header_triples", "webtables_subject_column",
@@ -119,15 +129,12 @@ _SWEEP_WINDOW = [
     "kg_shacl_report", "kg_shacl_summary",
     "dedup_incremental_pairs", "dedup_incremental_keep",
     "dedup_winnow_fps", "dedup_winnow_pairs",
-    "dedup_semantic_pairs", "dedup_semantic_keep",
     "kg_fused_triples", "kg_reified_triples", "kg_hearst_pairs",
     "kg_rdfa_triples",
     "graph_communities", "graph_kcore", "graph_hits", "graph_bfs_depths",
     "graph_sage_features",
     "crawl_frontier", "crawl_recrawl_schedule", "crawl_sitemap_frontier",
     "text_bm25", "text_c4_lines", "text_tfidf_terms", "text_readability",
-    "ann_int8_topk", "ann_pq_rerank_topk", "ann_recall_lsh",
-    "ann_cosine_batch_topk",
     "events_sessionize", "sample_mixture", "er_blocked_part_names",
     "kg_void_description",
 ]
